@@ -24,10 +24,16 @@ import graft.functions.{Names, Similarity}
   * into the pair stage, where only levenshtein + array set-ops run.
   *
   * Physical strategies:
-  *  - [[broadcastJoin]]: broadcast nested-loop — right side is small
-  *    (the reference holds ~2k CC candidates in driver memory, :323-349,
-  *    which is exactly Spark's broadcast shape). O(N×M) scoring but no
-  *    shuffle of the big side; exact reference semantics.
+  *  - [[broadcastJoin]]: exact, one pass over the left rows — the right
+  *    side is small (the reference holds ~2k CC candidates in driver
+  *    memory, :323-349, which is exactly Spark's broadcast shape). The
+  *    prepared right side is collected into ONE sorted candidate-table
+  *    row, broadcast, and each left row is scored against it by the
+  *    [[graft.plans.MatchArgmax]] kernel: the table is decoded once per
+  *    task, every candidate is scored at the running floor
+  *    max(cutoff, best + 1), and a 100 ends the walk. Still O(N×M)
+  *    scoring in the worst case, but no N×M pair rows, no shuffle of
+  *    the big side; exact reference semantics.
   *  - [[blockedJoin]]: token-blocking for scale — explode keyword tokens
   *    on both sides, drop tokens more frequent than `maxTokenFreq` on the
   *    right (stop-token skew control: a token shared by every row would
@@ -63,22 +69,25 @@ object MatchJoin {
     * >= cutoff. Scoring with every strategy floor at `cutoff` therefore
     * yields the identical accepted set and identical confidences while
     * halving the levenshtein band and letting most pairs exit on the
-    * zero-allocation length gates. */
+    * zero-allocation length gates. [[broadcastJoin]]'s argmax kernel
+    * carries the same argument across one left row's candidates: once a
+    * candidate scored `best`, a later one can only win above it, so it
+    * is scored at floor max(cutoff, best + 1). */
   private def pairScore(cutoff: Int): Column =
     graft.plans.FuzzyBestScore.column(
       col("left_sorted"), col("right_sorted"), col("left_norm"), col("right_norm"),
       col("left_set"), col("right_set"), col("left_kw"), col("right_kw"),
       cutoff, kwFloor = math.max(30, cutoff))
 
-  /** Per-left argmax with (score desc, right_key asc) tie-break and
-    * cutoff acceptance — as a partial-aggregating groupBy(max(struct))
-    * rather than a window: the accept filter runs BEFORE aggregation
-    * (exact: dropping sub-cutoff pairs cannot change a max that is
-    * >= cutoff, and a left row whose max is < cutoff disappears either
-    * way), and map-side combine collapses the N×M pair stream to one
-    * row per left key per partition before the only shuffle. A window
-    * formulation would shuffle and sort every scored pair. */
-  private def argmaxAccept(scored: DataFrame, cutoff: Int): DataFrame = {
+  /** Per-left argmax with (score desc, right_key asc) tie-break over
+    * accepted rows (left_key, left_name, right_key, right_name, score;
+    * a null score marks a left row without a match) — as a
+    * partial-aggregating groupBy(min(struct)) rather than a window:
+    * map-side combine collapses the stream to one row per left key per
+    * partition before the only shuffle. A window formulation would
+    * shuffle and sort every row. Grouping keeps duplicate left keys to
+    * one result, as the reference's keep-first does. */
+  private def keepBest(accepted: DataFrame): DataFrame = {
     // min over (-score, right_key, ...): the negation sits on the SCORE
     // (always a kernel int in [0, 100]), never on the right key — a
     // negated key would restrict the operator to numeric keys (ANSI
@@ -86,22 +95,42 @@ object MatchJoin {
     // silently nulled and INVERTED the documented ascending tie-break)
     val packed = struct((-col("score")).as("neg_score"), col("right_key"),
       col("right_name"), col("left_name"), col("score"))
-    scored.filter(col("score") >= cutoff)
-      .groupBy(col("left_key"))
-      .agg(min(packed).as("m"))
+    // null-score rows drop out inside the aggregate (min skips nulls),
+    // not by a filter: a filter would be pushed below the kernel's
+    // projection into the join and run the kernel twice per row
+    accepted.groupBy(col("left_key"))
+      .agg(min(when(col("score").isNotNull, packed)).as("m"))
+      .filter(col("m").isNotNull)
       .select(col("left_key"), col("m.left_name").as("left_name"),
         col("m.right_key").as("right_key"), col("m.right_name").as("right_name"),
         col("m.score").as("merged_confidence"))
   }
 
   /** Broadcast (exact) variant. Result: left_key, left_name, right_key,
-    * right_name, merged_confidence — one row per matched left row. */
+    * right_name, merged_confidence — one row per matched left row.
+    *
+    * Plan: the prepared right side collapses to one row holding the
+    * candidate table, `sort_array(collect_list(struct(...)))` — in
+    * (right_key, right_name) order, the tie-break order of the per-left
+    * min — which broadcasts onto the left rows; [[graft.plans.MatchArgmax]]
+    * then yields each left row's best candidate or null. Lazy and
+    * Catalyst-only (no action, no driver-side broadcast handle), so
+    * equal calls build equal plans and a persisted match is re-used by
+    * plan matching. An empty right side collects an empty table. */
   def broadcastJoin(left: DataFrame, leftKey: String, leftName: String,
                     right: DataFrame, rightKey: String, rightName: String,
                     cutoff: Int): DataFrame = {
     val l = prepSide(left, leftKey, leftName, "left", 1)
     val r = prepSide(right, rightKey, rightName, "right", 3)
-    argmaxAccept(l.crossJoin(broadcast(r)).withColumn("score", pairScore(cutoff)), cutoff)
+    val table = r.agg(sort_array(collect_list(struct(col("right_key"), col("right_name"),
+      col("right_sorted"), col("right_norm"), col("right_set"), col("right_kw"))))
+      .as("candidates"))
+    val best = l.crossJoin(broadcast(table))
+      .select(col("left_key"), col("left_name"), graft.plans.MatchArgmax.column(
+        col("left_sorted"), col("left_norm"), col("left_set"), col("left_kw"),
+        col("candidates"), cutoff).as("best"))
+    keepBest(best.select(col("left_key"), col("left_name"), col("best.right_key"),
+      col("best.right_name"), col("best.score")))
   }
 
   /** Token-blocked variant for scale. */
@@ -119,7 +148,9 @@ object MatchJoin {
     // re-scoring the few multi-token collisions is far cheaper than
     // shuffling the wide prep rows through a distinct.
     val pairs = lTok.join(rBlocked, "tok").drop("tok")
-    argmaxAccept(pairs.withColumn("score", pairScore(cutoff)), cutoff)
+    // the accept filter runs BEFORE aggregation (exact: dropping
+    // sub-cutoff pairs cannot change a max that is >= cutoff)
+    keepBest(pairs.withColumn("score", pairScore(cutoff)).filter(col("score") >= cutoff))
   }
 
   /** J-3: top-k candidates per left row by token_sort_ratio (the

@@ -34,6 +34,11 @@ object Pipeline {
     * must carry (idCol, website_url, company_name, industry). Output =
     * unified_companies minus the insert-time timestamp.
     *
+    * The default match is [[MatchJoin.broadcastJoin]]: the cleaned
+    * candidates collapse into one broadcast candidate table and every
+    * ABR row is scored against it by the argmax kernel — exact, but
+    * O(N×M) scoring work.
+    *
     * `blockTokenFreq = Some(f)` swaps the exact broadcast product for
     * [[MatchJoin.blockedJoin]] with stop-token frequency `f` — the
     * composition a 100 TB deployment runs: the exact product degrades

@@ -71,23 +71,30 @@ case class FuzzyBestScore(children: Seq[Expression], floorScore: Int, kwFloor: I
       v2.asInstanceOf[UTF8String], v3.asInstanceOf[UTF8String],
       v4.asInstanceOf[ArrayData], v5.asInstanceOf[ArrayData],
       v6.asInstanceOf[ArrayData], v7.asInstanceOf[ArrayData],
-      floorScore, kwFloor)
+      floorScore, kwFloor, rows)
   }
+
+  // DP scratch of the interpreted path; one per expression instance
+  // (Spark deserializes a plan per task, so never shared across tasks)
+  @transient private lazy val rows = new LevRows
 
   /** One static [[KernelOps]] call guarded by the children's null
     * flags (any null child → 0, matching `eval`); result is never
-    * null, so downstream codegen sees a FalseLiteral null bit. */
+    * null, so downstream codegen sees a FalseLiteral null bit. The
+    * levenshtein DP rows are a mutable field of the generated class. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val evals = children.map(_.genCode(ctx))
     val anyNull = evals.map(_.isNull.code.toString).mkString("(", ") || (", ")")
     val args = evals.map(_.value.code.toString).mkString(", ")
     val childCode = evals.map(_.code).reduce(_ + _)
+    val levRows = classOf[LevRows].getName
+    val scratch = ctx.addMutableState(levRows, "levRows", v => s"$v = new $levRows();")
     val resultCode =
       code"""
         |$childCode
         |int ${ev.value} = 0;
         |if (!($anyNull)) {
-        |  ${ev.value} = graft.plans.KernelOps.fuzzyBest($args, $floorScore, $kwFloor);
+        |  ${ev.value} = graft.plans.KernelOps.fuzzyBest($args, $floorScore, $kwFloor, $scratch);
         |}
       """.stripMargin
     ev.copy(code = resultCode, isNull = FalseLiteral)
@@ -119,48 +126,62 @@ object FuzzyBestScore {
   }
 
   /** Zero-copy variant over UTF8String: gates on numBytes before
-    * touching the payload. */
-  def ratioAtLeastU8(a: UTF8String, b: UTF8String, floorScore: Int): Int = {
+    * touching the payload (`getBytes` copies only an off-heap or
+    * sliced string; a heap string spanning its whole array is
+    * returned as is). */
+  def ratioAtLeastU8(a: UTF8String, b: UTF8String, floorScore: Int, rows: LevRows): Int = {
     if (!lengthGate(a.numBytes, b.numBytes, floorScore)) return -1
-    ratioAtLeast(a.getBytes, b.getBytes, floorScore)
+    ratioAtLeast(a.getBytes, b.getBytes, floorScore, rows)
   }
 
   /** floor(100*(1 - lev/maxlen)) if >= floorScore else -1; banded DP with
     * early exit (band width = max edits allowed by the floor). */
-  def ratioAtLeast(a: Array[Byte], b: Array[Byte], floorScore: Int): Int = {
+  def ratioAtLeast(a: Array[Byte], b: Array[Byte], floorScore: Int, rows: LevRows): Int = {
     val la = a.length; val lb = b.length
     val ml = math.max(math.max(la, lb), 1)
     // Long product against the ~21 MB Int-overflow cliff (see lengthGate)
     val maxD = (ml.toLong * (100 - floorScore) / 100).toInt // floor of allowed edits
     if (math.abs(la - lb) > maxD) return -1
-    val d = boundedLevenshtein(a, b, maxD)
+    val d = boundedLevenshtein(a, b, maxD, rows)
     if (d < 0) -1
     else math.floor(100.0 * (1.0 - d.toDouble / ml.toDouble)).toInt
   }
 
   def ratioAtLeast(a: String, b: String, floorScore: Int): Int =
-    ratioAtLeast(a.getBytes("UTF-8"), b.getBytes("UTF-8"), floorScore)
+    ratioAtLeast(a.getBytes("UTF-8"), b.getBytes("UTF-8"), floorScore, new LevRows)
 
   /** Levenshtein distance if <= maxD, else -1. Rolling-row DP restricted
-    * to the |i-j| <= maxD band. */
-  def boundedLevenshtein(a: Array[Byte], b: Array[Byte], maxD: Int): Int = {
+    * to the |i-j| <= maxD band, in the two rows of `rows` (reused across
+    * calls, grown on demand).
+    *
+    * Only band cells are ever written, so nothing is cleared between
+    * rows or calls: row i computes columns [from, to] and writes two
+    * sentinels, its left neighbour `from - 1` (column 0's boundary
+    * value, or INF inside the matrix) and its right neighbour `to + 1`
+    * (INF). Row i reads row i-1 at [from - 1, to] and itself at
+    * [from - 1, to - 1]; both ranges lie inside what the previous row
+    * and this one wrote, whatever a previous call left elsewhere. */
+  def boundedLevenshtein(a: Array[Byte], b: Array[Byte], maxD: Int, rows: LevRows): Int = {
     val la = a.length; val lb = b.length
     if (la == 0) return if (lb <= maxD) lb else -1
     if (lb == 0) return if (la <= maxD) la else -1
     if (math.abs(la - lb) > maxD) return -1
     val INF = Int.MaxValue / 2
-    var prev = new Array[Int](lb + 1)
-    var curr = new Array[Int](lb + 1)
-    java.util.Arrays.fill(prev, INF)
+    rows.ensure(lb + 1)
+    var prev = rows.a
+    var curr = rows.b
+    val top = math.min(lb, maxD)
     var j = 0
-    while (j <= math.min(lb, maxD)) { prev(j) = j; j += 1 }
+    while (j <= top) { prev(j) = j; j += 1 }
+    if (top < lb) prev(top + 1) = INF
     var i = 1
     while (i <= la) {
-      java.util.Arrays.fill(curr, INF)
       val from = math.max(1, i - maxD)
       val to = math.min(lb, i + maxD)
-      if (from == 1 && i <= maxD) curr(0) = i
-      var rowMin = if (curr(0) < INF) curr(0) else INF
+      val left = if (from == 1 && i <= maxD) i else INF
+      curr(from - 1) = left
+      if (to < lb) curr(to + 1) = INF
+      var rowMin = left
       var jj = from
       while (jj <= to) {
         val cost = if (a(i - 1) == b(jj - 1)) 0 else 1
@@ -180,6 +201,10 @@ object FuzzyBestScore {
     if (prev(lb) <= maxD) prev(lb) else -1
   }
 
+  /** [[boundedLevenshtein]] in fresh rows, for one-off callers. */
+  def boundedLevenshtein(a: Array[Byte], b: Array[Byte], maxD: Int): Int =
+    boundedLevenshtein(a, b, maxD, new LevRows)
+
   @inline private def elem(a: ArrayData, i: Int): UTF8String = {
     val s = if (a.isNullAt(i)) null else a.getUTF8String(i)
     if (s == null) UTF8String.EMPTY_UTF8 else s
@@ -197,7 +222,7 @@ object FuzzyBestScore {
     * floor. Pass 1 merge-counts the three set-op string lengths straight
     * off the ArrayData and length-gates all three component ratios; the
     * strings themselves are only built (pass 2) for surviving pairs. */
-  def tokenSetRatioAtLeast(ta: ArrayData, tb: ArrayData, floorScore: Int): Int = {
+  def tokenSetRatioAtLeast(ta: ArrayData, tb: ArrayData, floorScore: Int, rows: LevRows): Int = {
     val na = ta.numElements(); val nb = tb.numElements()
     // pass 1: merge-count joined byte lengths
     var i = 0; var j = 0
@@ -235,9 +260,9 @@ object FuzzyBestScore {
     val t1 = joinNonEmpty(s0, restA.bytes)
     val t2 = joinNonEmpty(s0, restB.bytes)
     var best = -1
-    if (g01) { val x = ratioAtLeast(s0, t1, floorScore); if (x > best) best = x }
-    if (g02) { val x = ratioAtLeast(s0, t2, floorScore); if (x > best) best = x }
-    if (g12) { val x = ratioAtLeast(t1, t2, floorScore); if (x > best) best = x }
+    if (g01) { val x = ratioAtLeast(s0, t1, floorScore, rows); if (x > best) best = x }
+    if (g02) { val x = ratioAtLeast(s0, t2, floorScore, rows); if (x > best) best = x }
+    if (g12) { val x = ratioAtLeast(t1, t2, floorScore, rows); if (x > best) best = x }
     best
   }
 
@@ -279,4 +304,18 @@ object FuzzyBestScore {
     val union = na + nb - inter
     (inter.toLong * 100 / union).toInt
   }
+}
+
+/** The two rolling levenshtein DP rows, owned by one caller (a
+  * generated class, an expression instance or a [[MatchArgmax]] task
+  * kernel) and reused across calls; never shared between threads. */
+final class LevRows {
+  var a: Array[Int] = Array.emptyIntArray
+  var b: Array[Int] = Array.emptyIntArray
+
+  def ensure(n: Int): Unit =
+    if (a.length < n) {
+      val size = math.max(n, a.length * 2)
+      a = new Array[Int](size); b = new Array[Int](size)
+    }
 }

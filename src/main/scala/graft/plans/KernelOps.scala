@@ -228,19 +228,19 @@ object KernelOps {
                 lNorm: UTF8String, rNorm: UTF8String,
                 lSet: ArrayData, rSet: ArrayData,
                 lKw: ArrayData, rKw: ArrayData,
-                floorScore: Int, kwFloor: Int): Int = {
+                floorScore: Int, kwFloor: Int, rows: LevRows): Int = {
     import FuzzyBestScore._
     var best = 0
     // strategy floors rise with the running best: a score <= best can
     // never change the max, so asking the scorer to refuse below
     // best + 1 is exact and narrows its levenshtein band.
-    var s = ratioAtLeastU8(lSorted, rSorted, floorScore)
+    var s = ratioAtLeastU8(lSorted, rSorted, floorScore, rows)
     if (s > best) best = s
     if (best < 100) {
-      s = tokenSetRatioAtLeast(lSet, rSet, math.max(floorScore, best + 1))
+      s = tokenSetRatioAtLeast(lSet, rSet, math.max(floorScore, best + 1), rows)
       if (s > best) best = s
       if (best < 100) {
-        s = ratioAtLeastU8(lNorm, rNorm, math.max(floorScore, best + 1))
+        s = ratioAtLeastU8(lNorm, rNorm, math.max(floorScore, best + 1), rows)
         if (s > best) best = s
       }
     }
@@ -708,7 +708,7 @@ object KernelOps {
     * ratio(t1,t2))`. ASCII-domain contract as FuzzyBestScore: byte
     * distance == codepoint distance only on normalized names. */
   def tokenSetRatio100(ta: ArrayData, tb: ArrayData): Int =
-    FuzzyBestScore.tokenSetRatioAtLeast(ta, tb, 0)
+    FuzzyBestScore.tokenSetRatioAtLeast(ta, tb, 0, new LevRows)
 
   /** [[WordShingles]]: word-k-shingle STRINGS (position order, not the
     * hashes [[shingleHashes]] computes). Splitting on single spaces and
@@ -716,7 +716,13 @@ object KernelOps {
     * bytes from the start of token i to the end of token i+k-1 — the
     * shingles are zero-copy slices of one shared byte copy. A doc
     * shorter than k tokens contributes its whole text as one shingle
-    * (graft.functions.Hashing.shingles semantics). */
+    * (graft.functions.Hashing.shingles semantics).
+    *
+    * Domain: valid UTF-8. There a 0x20 byte is always a space (never
+    * inside a multi-byte sequence), so the slices equal the twin's
+    * split-and-rejoin strings byte for byte; on invalid UTF-8 (Parquet
+    * can carry it) the twin decodes malformed bytes to U+FFFD while
+    * the slices keep the raw bytes. */
   def wordShingles(text: UTF8String, k: Int): ArrayData = {
     val b = text.getBytes
     var spaces = 0
@@ -897,7 +903,12 @@ object KernelOps {
     * length(w))` — the summed token lengths of qualityScore's mean-
     * length term. Tokens partition the text's code points minus the
     * splitting spaces, so the sum is numChars − spaces: two counters,
-    * no token materialization, no interpreted fold. */
+    * no token materialization, no interpreted fold.
+    *
+    * Domain: valid UTF-8, where that partition holds. On invalid
+    * UTF-8 (Parquet can carry it) `numChars` steps by lead-byte
+    * widths, so a truncated multi-byte lead can swallow a following
+    * space byte and the identity breaks. */
   def sumTokenChars(text: UTF8String): Long = {
     val b = text.getBytes
     var spaces = 0

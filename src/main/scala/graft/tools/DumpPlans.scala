@@ -21,7 +21,7 @@ object DumpPlans {
 
     val notes = Map(
       "s8_scan_project" -> "Filter + projection reach the parquet scan (PushedFilters / pruned ReadSchema) — at 100 TB this is the difference between reading 2 columns and reading 16.",
-      "j1_similarity_join" -> "Candidate side broadcast; the >= cutoff accept runs as the BroadcastNestedLoopJoin CONDITION, so only surviving pairs materialize; argmax is a partial-aggregating max(struct), shuffling one row per left key per partition.",
+      "j1_similarity_join" -> "Candidate side collected into ONE sorted candidate-table row and broadcast (a 1-row BroadcastNestedLoopJoin); the matchargmax kernel scores each left row against it at a running floor and emits its best accepted candidate or null, so no pair rows materialize; duplicate left keys meet in a partial-aggregating min(struct), shuffling at most one row per left key per partition.",
       "j1_blocked_join" -> "Scale path: keyword tokens exploded, stop-token frequency filter broadcast, equi-join on token replaces the cross product; shuffle volume is the sum of block sizes.",
       "d2_minhash_pairs" -> "Signature table persisted once; band explode + equi-join generates candidates (O(docs x bands) shuffle); the wide shingle arrays never shuffle — the corpus streams against the broadcast pair list twice.",
       "a2_pricing_summary" -> "Partial (map-side) + final hash aggregation — one narrow shuffled row per group per partition.",

@@ -73,6 +73,14 @@ class CodegenSpec extends SparkSpec {
         col("left_sorted"), col("right_sorted"), col("left_norm"), col("right_norm"),
         col("left_set"), col("right_set"), col("left_kw"), col("right_kw"),
         60, 30).as("fuzzy"),
+      // a per-row candidate table, so the kernel re-decodes every row;
+      // at cutoff 0 every row yields a candidate
+      MatchArgmax.column(col("left_sorted"), col("left_norm"), col("left_set"), col("left_kw"),
+        array(Seq((3L, "ln", "left"), (7L, "rn", "right")).map { case (k, name, side) =>
+          struct(lit(k).as("key"), col(name).as("name"),
+            col(s"${side}_sorted").as("sorted"), col(s"${side}_norm").as("norm"),
+            col(s"${side}_set").as("set"), col(s"${side}_kw").as("kw"))
+        }: _*), 0).as("argmax"),
       // vector kernels
       VecExprs.dot(col("va"), col("vb")).as("dot"),
       VecExprs.lshBuckets(col("va"), 8, 2).as("lsh"),
@@ -103,7 +111,7 @@ class CodegenSpec extends SparkSpec {
     val kernels: Seq[Class[_]] = Seq(
       classOf[ShingleHashes64], classOf[SimHash64], classOf[WinnowFingerprints64],
       classOf[MinHashSig], classOf[JaccardLong100], classOf[RatioScore],
-      classOf[FuzzyBestScore], classOf[NormalizeName], classOf[KeywordsArr],
+      classOf[FuzzyBestScore], classOf[MatchArgmax], classOf[NormalizeName], classOf[KeywordsArr],
       classOf[ExtractFromTitle], classOf[IsValidCompanyName],
       classOf[VecDot], classOf[LshBuckets], classOf[PqEncode], classOf[PqPairDot],
       classOf[SigAgree], classOf[SortedDistinctLongs],

@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.forAll
 import org.scalacheck.Test.{check, Parameters}
 import graft.functions.{Names, Similarity}
-import graft.plans.FuzzyBestScore
+import graft.plans.{FuzzyBestScore, LevRows}
 
 /** The custom Catalyst scorer must be score-identical to the
   * declarative chain that the DuckDB oracle mirrors — checked on
@@ -32,6 +32,44 @@ class FuzzyBestScoreSpec extends SparkSpec {
       val banded = FuzzyBestScore.ratioAtLeast(a, b, 60)
       if (full >= 60) banded == full else banded == -1
     })
+  }
+
+  test("banded levenshtein in reused DP rows equals the full-matrix distance") {
+    // one LevRows across every call, with lengths and bands changing
+    // call to call: a cell left over from an earlier call must never be
+    // read as part of the band
+    val rnd = new scala.util.Random(Fuzz.seed)
+    val rows = new LevRows
+    val alphabet = "AB C".getBytes("US-ASCII")
+    def gen(max: Int): Array[Byte] =
+      Array.fill(rnd.nextInt(max + 1))(alphabet(rnd.nextInt(alphabet.length)))
+    def mutate(a: Array[Byte]): Array[Byte] = {
+      val b = scala.collection.mutable.ArrayBuffer(a.toSeq: _*)
+      for (_ <- 0 until rnd.nextInt(6)) rnd.nextInt(3) match {
+        case 0 => b.insert(rnd.nextInt(b.length + 1), alphabet(rnd.nextInt(alphabet.length)))
+        case 1 if b.nonEmpty => b.remove(rnd.nextInt(b.length))
+        case _ if b.nonEmpty => b(rnd.nextInt(b.length)) = alphabet(rnd.nextInt(alphabet.length))
+        case _ =>
+      }
+      b.toArray
+    }
+    for (n <- 1 to 20000) {
+      val a = gen(if (n % 100 == 0) 300 else 40)
+      val b = if (rnd.nextInt(3) > 0) mutate(a) else gen(40)
+      val (sa, sb) = (new String(a, "US-ASCII"), new String(b, "US-ASCII"))
+      val full = levDp(sa, sb)
+      val maxD = rnd.nextInt(a.length.max(b.length) + 4) - 2
+      val got = FuzzyBestScore.boundedLevenshtein(a, b, maxD, rows)
+      assert(got == (if (full <= maxD) full else -1),
+        s"seed ${Fuzz.seed}: lev('$sa', '$sb') = $full, band $maxD gave $got")
+      val ml = a.length.max(b.length).max(1)
+      val ratio = math.floor(100.0 * (1.0 - full.toDouble / ml)).toInt
+      for (floor <- Seq(60, 80, 89, 95)) {
+        val r = FuzzyBestScore.ratioAtLeast(a, b, floor, rows)
+        assert(r == (if (ratio >= floor) ratio else -1),
+          s"seed ${Fuzz.seed}: ratio('$sa', '$sb') = $ratio, floor $floor gave $r")
+      }
+    }
   }
 
   private def levDp(a: String, b: String): Int = {

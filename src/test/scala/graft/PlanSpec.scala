@@ -53,16 +53,22 @@ class PlanSpec extends SparkSpec {
     val p = plan("j1_similarity_join")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"expected broadcast join in:\n$p")
+    // the broadcast side is the one-row candidate table, not the
+    // prepared candidate rows
+    assert(p.contains("collect_list("), s"expected the collected candidate table in:\n$p")
   }
 
-  test("j1: accept filter is the join condition, not a post-join filter") {
-    // the >= cutoff accept must run INSIDE the broadcast nested-loop
-    // join so only surviving pairs materialize (regression guard for
-    // the accept-path floor-raise optimization)
+  test("j1: the argmax kernel scores each left row; no pair stream feeds the aggregate") {
+    // one kernel call per left row against the broadcast table: no
+    // per-pair scorer anywhere, and the kernel is never a join
+    // condition (a filter pushed into the join would run it twice)
     val p = SparkEntry.queries("j1_similarity_join")(spark, sf)
       .queryExecution.optimizedPlan.toString
-    assert(p.contains("Cross, (fuzzybestscore("),
-      s"expected fuzzybestscore >= cutoff as the cross-join condition in:\n$p")
+    assert(p.contains("matchargmax("), s"expected the matchargmax kernel in:\n$p")
+    assert(!p.contains("fuzzybestscore("), s"expected no per-pair scorer in:\n$p")
+    val joins = p.linesIterator.filter(_.contains("NestedLoopJoin")).toVector
+    assert(joins.nonEmpty && joins.forall(l => !l.contains("matchargmax(")),
+      s"expected the kernel outside every join condition in:\n$p")
   }
 
   test("d2 pairs: AQE converts the small-pair-list enrichment to broadcast") {
